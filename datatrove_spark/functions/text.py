@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from datatrove_spark.config import ALNUM_RE, ALPHA_RE, TOKEN_RE, WORD_RE
+from datatrove_spark.config import ALNUM_RE, TOKEN_RE, WORD_RE
 
 
 def words(text: Column | str) -> Column:
@@ -33,26 +33,8 @@ def non_symbol_words(ws: Column) -> Column:
     return F.filter(ws, lambda w: w.rlike(ALNUM_RE))
 
 
-def alpha_words(ws: Column) -> Column:
-    """Words containing at least one ASCII letter (gopher_quality_filter.py:117)."""
-    return F.filter(ws, lambda w: w.rlike(ALPHA_RE))
-
-
 def lines(text: Column | str) -> Column:
     return F.split(F.col(text) if isinstance(text, str) else text, "\n", -1)
-
-
-def non_empty_lines(text: Column | str) -> Column:
-    """Split on runs of newlines -> no empty elements for inner lines
-    (gopher_repetition_filter.py:107 uses \\n+)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(trim_ws(c), r"\n+", -1)
-
-
-def paragraphs(text: Column | str) -> Column:
-    """Split trimmed text on blank-line runs (gopher_repetition_filter.py:106)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(trim_ws(c), r"\n{2,}", -1)
 
 
 def trim_ws(c: Column) -> Column:
@@ -79,17 +61,6 @@ def substr_count(text: Column, sub: str) -> Column:
 
 def char_count(text: Column, ch: str) -> Column:
     return F.length(text) - F.length(F.replace(text, F.lit(ch), F.lit("")))
-
-
-def word_ngrams(ws: Column, n: int) -> Column:
-    """Array of space-joined word n-grams (gopher_repetition_filter.py:31-32).
-    Empty array when fewer than n words (NB: F.sequence(0, -1) would count
-    DOWN, so the short case must be guarded explicitly)."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(ws) - n),
-        lambda i: F.array_join(F.slice(ws, i + 1, n), " "),
-    )
-    return F.when(F.size(ws) >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
 def sentences(text: Column | str) -> Column:

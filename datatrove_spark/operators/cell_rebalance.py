@@ -77,7 +77,8 @@ def apply(
     centroids/centroid_ids: trained (K, dim) array + per-row cell labels;
     default is the deterministic lowest-id rows of the corpus (the same
     convention semdedup/ivf_topk use, so one trained codebook can drive
-    dedup, ANN, and rebalancing consistently)."""
+    dedup, ANN, and rebalancing consistently). Raises ValueError on
+    duplicate centroid ids."""
     import numpy as np
 
     from datatrove_spark.operators.similarity import assign_cells
@@ -98,6 +99,10 @@ def apply(
             if centroid_ids is not None
             else list(range(len(cents)))
         )
+    if len(set(cell_ids)) != len(cell_ids):
+        # two centroids sharing one label would merge their cells, and the
+        # literal and broadcast paths would count the merged cell differently
+        raise ValueError("centroid ids must be unique")
     assigned = assign_cells(df, cents, id_col=id_col, vec_col=vec_col)
     thr_name = f"{NAME}_thr"
     if len(cell_ids) <= max_literal_cells:

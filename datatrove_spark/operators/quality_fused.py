@@ -1,12 +1,13 @@
 """Fused quality battery — the measured hot path for the full pipeline.
 
-The per-stage operators (gopher_repetition/gopher_quality/c4_quality/
-fineweb_quality) are declarative column expressions, which is ideal for
-single-stage use and SQL-oracle parity. Composing all four into one plan,
-however, defeats Catalyst's subexpression elimination: higher-order-function
-lambdas get fresh variable IDs per call, so the shared word/line/sentence
-arrays are re-evaluated per stage (measured 24 s / 10k docs on local[32]
-vs 11 s for the stages run separately).
+Of the per-stage operators, gopher_quality/c4_quality/fineweb_quality are
+declarative column expressions and gopher_repetition is an Arrow-batched
+pandas UDF; each is ideal for single-stage use and SQL-oracle parity.
+Composing all four into one plan, however, defeats Catalyst's
+subexpression elimination: higher-order-function lambdas get fresh variable
+IDs per call, so the shared word/line/sentence arrays are re-evaluated per
+stage (measured 24 s / 10k docs on local[32] vs 11 s for the stages run
+separately).
 
 This operator runs the whole battery in ONE Arrow-batched pandas UDF whose
 per-doc kernels are the engine's pure-Python reference implementations —
@@ -23,7 +24,7 @@ short-circuiting):
                   gopher_repetition -> gopher_quality -> c4 -> fineweb
     final_text  = c4-rewritten text iff gopher stages passed (c4 only runs
                   then); original text otherwise
-    fineweb runs on the c4-rewritten text (as in the composed plan).
+    fineweb runs on the c4-rewritten text.
 """
 
 from __future__ import annotations

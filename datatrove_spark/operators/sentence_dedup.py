@@ -32,7 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from datatrove_spark.functions import text as T
 from datatrove_spark.functions.hashing import sql_hash60
 
 NAME = "sentence_dedup"
@@ -48,8 +47,7 @@ class SentenceDedupConfig:
 def py_span_hashes(text: str, n: int) -> list[int]:
     """Per-doc kernel: h60 of the simplified text of each n-sentence window
     (index = first sentence position). Shares the sentence/simplify/h60
-    definitions with the SQL oracle and the declarative path it replaces
-    (lambda higher-order expressions run interpreted — measured ~3x slower)."""
+    definitions with the SQL oracle."""
     from datatrove_spark.functions.hashing import py_hash60
     from datatrove_spark.reference_impl.filters import sentences, simplify_text
 
@@ -80,15 +78,13 @@ def _spans(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
 def py_remove_spans(
     text: str | None, remove_idx, cfg: SentenceDedupConfig
 ) -> tuple[str | None, bool | None]:
-    """Per-doc rewrite kernel (matches _remove_spans_native's expression
-    semantics value-for-value, NULL included): drop flagged sentences,
-    rebuild text, recount from the rebuilt text."""
+    """Per-doc rewrite kernel (matches the SQL oracle's `_sql_finish`
+    value-for-value, NULL included): drop flagged sentences, rebuild text,
+    recount from the rebuilt text."""
     from datatrove_spark.reference_impl.filters import sentences, words
 
     if text is None:
-        # match the declarative NULL semantics under this session's legacy
-        # (non-ANSI) config: array_join(NULL) -> NULL text, but
-        # size(NULL) = -1 -> (-1 >= min) -> keep FALSE, not NULL
+        # NULL text stays NULL and the doc is dropped (keep FALSE, not NULL)
         return None, False
     rem = set(remove_idx) if remove_idx is not None else ()
     ss = sentences(text)
@@ -109,12 +105,7 @@ def _remove_spans(
 ) -> DataFrame:
     """Shared filter stage: drop the flagged span occurrences' sentences,
     rebuild text, keep docs with enough surviving sentences/words — one
-    Arrow kernel pass per doc. The declarative rendering
-    (_remove_spans_native) is retained as executable documentation: its
-    rewrite expression is cloned three times per row by CollapseProject
-    (text, sentence recount, word recount) and each clone splits sentences
-    with the backtracking regex — O(n^2) per doc on terminator-free text
-    (measured 36 s vs 4 s over 500k unpunctuated docs, BENCH.md round 4)."""
+    Arrow kernel pass per doc."""
     covered = _covered(dup_spans, id_col, cfg.span)
     out = df.join(covered, id_col, "left")
 
@@ -141,32 +132,6 @@ def _covered(dup_spans: DataFrame, id_col: str, n: int) -> DataFrame:
         )
         .groupBy(id_col)
         .agg(F.collect_set("ri").alias("remove_idx"))
-    )
-
-
-def _remove_spans_native(
-    df: DataFrame, dup_spans: DataFrame, id_col: str, text_col: str, cfg: SentenceDedupConfig
-) -> DataFrame:
-    """Declarative-expression rendering of _remove_spans (same values) —
-    executable documentation / cross-check only; see _remove_spans for why
-    the Arrow kernel is the hot path."""
-    covered = _covered(dup_spans, id_col, cfg.span)
-    out = df.join(covered, id_col, "left").withColumn(
-        "remove_idx", F.coalesce(F.col("remove_idx"), F.array().cast("array<int>"))
-    )
-    sents = T.sentences(F.col(text_col))
-    kept_sents = F.filter(
-        F.transform(sents, lambda s, i: F.struct(s.alias("s"), i.alias("i"))),
-        lambda st: ~F.array_contains(F.col("remove_idx"), st["i"]),
-    )
-    new_text = F.array_join(F.transform(kept_sents, lambda st: st["s"]), "")
-    n_kept = F.size(T.sentences(new_text))
-    n_words = F.size(T.words(new_text))
-    keep = (n_kept >= cfg.min_sentences) & (n_words >= cfg.min_words)
-    return (
-        out.withColumn(f"{NAME}_text", new_text)
-        .withColumn(f"{NAME}_keep", keep)
-        .drop("remove_idx")
     )
 
 
@@ -257,7 +222,8 @@ def _sql_spans_cte(table: str, id_col: str, text_col: str, n: int) -> str:
 
 def _sql_finish(table: str, id_col: str, text_col: str, cfg: SentenceDedupConfig) -> str:
     """removed/rebuilt/final — shared between the self-dedup and index oracles;
-    expects a `dups(id, sent_idx)` CTE in scope."""
+    expects a `dups(id, sent_idx)` CTE in scope. NULL text stays NULL and
+    its doc is dropped."""
     n = cfg.span
     sents = f"regexp_extract_all({text_col}, '[^.!?]+[.!?]+')"
     return f"""removed AS (
@@ -265,15 +231,15 @@ def _sql_finish(table: str, id_col: str, text_col: str, cfg: SentenceDedupConfig
   FROM dups GROUP BY id
 ), rebuilt AS (
   SELECT b.{id_col} AS id,
-    coalesce(array_to_string(list_transform(
+    CASE WHEN b.{text_col} IS NOT NULL THEN coalesce(array_to_string(list_transform(
       list_filter(list_transform({sents}, (s, ix) -> {{'s': s, 'i': ix - 1}}),
                   st -> NOT list_contains(coalesce(r.ri, []), st['i'])),
-      st -> st['s']), ''), '') AS new_text
+      st -> st['s']), ''), '') END AS new_text
   FROM {table} b LEFT JOIN removed r ON b.{id_col} = r.id
 )
 SELECT id AS {id_col}, new_text AS {NAME}_text,
-  (len(regexp_extract_all(new_text, '[^.!?]+[.!?]+')) >= {cfg.min_sentences}
-   AND len(regexp_extract_all(new_text, '\\S+')) >= {cfg.min_words}) AS {NAME}_keep
+  coalesce(len(regexp_extract_all(new_text, '[^.!?]+[.!?]+')) >= {cfg.min_sentences}
+   AND len(regexp_extract_all(new_text, '\\S+')) >= {cfg.min_words}, false) AS {NAME}_keep
 FROM rebuilt"""
 
 
@@ -311,37 +277,13 @@ def oracle_sql(
     text_col: str = "text",
     cfg: SentenceDedupConfig = SentenceDedupConfig(),
 ) -> str:
-    n = cfg.span
-    sents = f"regexp_extract_all({text_col}, '[^.!?]+[.!?]+')"
-    simp = _SIMPLIFY.format(t=f"array_to_string(sents[i+1:i+{n}], '')")
     return f"""
-WITH base AS (
-  SELECT {id_col} AS id, {text_col} AS t, {sents} AS sents FROM {table}
-), spans AS (
-  SELECT id, u['i'] AS sent_idx, u['h'] AS h
-  FROM (
-    SELECT id, unnest(list_transform(range(0, len(sents) - {n} + 1),
-                i -> {{'i': i, 'h': {sql_hash60(f"({simp})")}}})) AS u
-    FROM base WHERE len(sents) >= {n}
-  )
-), dups AS (
+WITH spans AS ({_sql_spans_cte(table, id_col, text_col, cfg.span)}),
+dups AS (
   SELECT id, sent_idx FROM (
     SELECT id, sent_idx, row_number() OVER (PARTITION BY h ORDER BY id, sent_idx) AS rn
     FROM spans
   ) WHERE rn > 1
-), removed AS (
-  SELECT id, list_distinct(flatten(list(range(sent_idx, sent_idx + {n})))) AS ri
-  FROM dups GROUP BY id
-), rebuilt AS (
-  SELECT b.id, b.t,
-    coalesce(array_to_string(list_transform(
-      list_filter(list_transform(b.sents, (s, ix) -> {{'s': s, 'i': ix - 1}}),
-                  st -> NOT list_contains(coalesce(r.ri, []), st['i'])),
-      st -> st['s']), ''), '') AS new_text
-  FROM base b LEFT JOIN removed r ON b.id = r.id
-)
-SELECT id AS {id_col}, new_text AS {NAME}_text,
-  (len(regexp_extract_all(new_text, '[^.!?]+[.!?]+')) >= {cfg.min_sentences}
-   AND len(regexp_extract_all(new_text, '\\S+')) >= {cfg.min_words}) AS {NAME}_keep
-FROM rebuilt
+),
+{_sql_finish(table, id_col, text_col, cfg)}
 """.strip()

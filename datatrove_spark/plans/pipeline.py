@@ -81,9 +81,7 @@ def canonical_stages(with_url_filter: bool = True) -> list[Stage]:
 
     stages = []
     if with_url_filter:
-        from datatrove_spark.config import DEFAULT_CONFIG
-
-        stages.append(Stage("url_filter", lambda df: _url_filter_stage(df)))
+        stages.append(Stage("url_filter", _url_filter_stage))
     stages += [
         Stage("langid", langid.apply),
         Stage("quality_battery", quality),

@@ -12,6 +12,7 @@ import io
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from datatrove_spark.operators import cell_rebalance, lang_rebalance
@@ -98,6 +99,19 @@ def test_trained_codebook_labels_are_centroid_ids(spark):
     }  # row-index labels
     remap = dict(enumerate(sparse_ids))
     assert labels == {vid: remap[c] for vid, c in default.items()}
+
+
+def test_duplicate_centroid_ids_rejected(spark):
+    """Duplicate centroid ids would merge two cells under one label, so the
+    literal and the broadcast-join path both reject them at entry."""
+    emb = _emb(spark)
+    cents = np.eye(3, 64)
+    for max_literal_cells in (cell_rebalance.MAX_LITERAL_CELLS, 0):
+        with pytest.raises(ValueError, match="unique"):
+            cell_rebalance.apply(
+                emb, centroids=cents, centroid_ids=[5, 9, 5],
+                max_literal_cells=max_literal_cells,
+            )
 
 
 def test_many_cells_does_not_overflow_analyzer(spark):

@@ -8,6 +8,8 @@ the exact brute force, and the index/probe plan shape.
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -186,11 +188,22 @@ def test_semdedup_edges_block_kernel_not_hof(spark, emb):
     assert final.count("MapInPandas") == 1, final
     assert final.count("ArrowEvalPython") == 1, final
     assert final.count("ReusedExchange") == 1, final
-    # and the kernel's output matches the interpreted row-wise rendering
-    rowwise = similarity.semdedup_edges_rowwise(cells, 0.45)
-    assert sorted((r.a, r.b) for r in rows) == sorted(
-        (r.a, r.b) for r in rowwise.collect()
-    )
+    # and the kernel's output matches a driver-side brute force over every
+    # within-cell pair (left-to-right float64 folds, like the kernel)
+    by_cell: dict[int, list] = {}
+    for r in cells.collect():
+        by_cell.setdefault(r.cell, []).append((r.vec_id, r.embedding))
+    want = []
+    for members in by_cell.values():
+        for ia, va in members:
+            for ib, vb in members:
+                if ia < ib:
+                    dot = sum(x * y for x, y in zip(va, vb))
+                    na = math.sqrt(sum(x * x for x in va))
+                    nb = math.sqrt(sum(y * y for y in vb))
+                    if dot / (na * nb) >= 0.45:
+                        want.append((ia, ib))
+    assert sorted((r.a, r.b) for r in rows) == sorted(want)
 
 
 def test_shuffle_vec_keeps_float32_widens_ints(spark, emb):

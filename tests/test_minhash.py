@@ -42,10 +42,20 @@ def test_signatures_shape_and_determinism(spark, corpus):
     assert by_doc[0] == by_doc[5]  # identical text -> identical sigs
 
 
-def test_kernel_matches_native_expressions(spark, corpus):
-    a = sorted(tuple(r) for r in minhash.signatures(corpus).collect())
-    b = sorted(tuple(r) for r in minhash.signatures_native(corpus).collect())
+def test_kernel_matches_oracle_signatures(spark):
+    """The numpy signature kernel matches the DuckDB oracle on the crafted
+    docs plus NULL/empty text, which emit no signature rows on both sides."""
+    import duckdb
+
+    docs = DOCS + [(90, None), (91, "")]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    a = sorted(tuple(r) for r in minhash.signatures(df).collect())
+    b = sorted(tuple(r) for r in con.execute(minhash.oracle_sql_signatures()).fetchall())
     assert a == b
+    assert {r[0] for r in a} == {0, 1, 2, 3, 5}
 
 
 def test_pairs_find_near_dups(spark, corpus):

@@ -118,17 +118,27 @@ def test_langid_wide_coverage(spark, duck_small):
     assert s == d
 
 
-def test_langid_kernel_matches_native(spark):
-    """The Arrow-batched py_langid hot path is bit-identical to the
-    declarative detect() twin on real docs, crafted script docs, and the
-    NULL/empty/whitespace edges."""
+def test_langid_kernel_matches_oracle_on_edges(spark):
+    """The Arrow-batched py_langid kernel matches the DuckDB oracle on real
+    docs, crafted script docs, and the NULL/empty/whitespace/no-hit edges."""
+    import duckdb
+
     from datatrove_spark.operators import langid
 
-    edges = [(1000, None), (1001, ""), (1002, "   \n\t  "), (1003, "xqzt blorp")]
+    extra = LANGID_DOCS + [(1000, None), (1001, ""), (1002, "   \n\t  "), (1003, "xqzt blorp")]
     df = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select("doc_id", "text").union(
-        spark.createDataFrame(LANGID_DOCS + edges, "doc_id long, text string")
+        spark.createDataFrame(extra, "doc_id long, text string")
     )
-    cols = ["doc_id", "language", "language_score", "langid_keep", "langid_reason"]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT doc_id, text "
+        f"FROM read_parquet('{SF_SMALL}/documents.parquet')"
+    )
+    con.executemany("INSERT INTO documents VALUES (?, ?)", extra)
+    cols = ["doc_id", "language", "language_score", "langid_keep"]
     a = sorted(tuple(r) for r in langid.apply(df).select(cols).collect())
-    b = sorted(tuple(r) for r in langid.apply_native(df).select(cols).collect())
+    b = sorted(tuple(r) for r in con.execute(langid.oracle_sql()).fetchall())
     assert a == b
+    got = {r[0]: r[1:] for r in a}
+    assert got[1000] == ("und", None, False)  # NULL text: no words, dropped
+    assert got[1003] == ("und", 0.0, False)  # words but no profile hit

@@ -132,32 +132,21 @@ def test_index_empty_index_is_identity_for_true_mode(spark, corpus):
     assert base[1] != orig[1]
 
 
-def test_kernel_rewrite_matches_native_rendering(spark, corpus):
-    """The Arrow rewrite kernel (_remove_spans) and the declarative
-    rendering (_remove_spans_native) must agree value-for-value — including
-    NULL text, where the legacy size(NULL) = -1 makes keep FALSE while the
-    rewritten text stays NULL."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+def test_kernel_rewrite_matches_oracle_on_edges(spark, corpus):
+    """The Arrow rewrite kernel agrees with the DuckDB oracle value-for-value
+    on the corpus plus NULL, empty, terminator-free and repeated-sentence
+    docs — including NULL text, where the rewritten text stays NULL and the
+    doc is dropped."""
+    import duckdb
 
-    from datatrove_spark.operators.sentence_dedup import (
-        SentenceDedupConfig,
-        _remove_spans,
-        _remove_spans_native,
-        _spans,
-    )
-
-    extra = spark.createDataFrame(
-        [(90, None), (91, ""), (92, "no terminators here at all"), (93, "One. Two! Three? " * 20)],
-        "doc_id long, text string",
-    )
-    df = corpus.union(extra)
-    cfg = SentenceDedupConfig()
-    spans = _spans(df, "doc_id", "text", cfg.span)
-    w = Window.partitionBy("h").orderBy(F.col("doc_id").asc(), F.col("sent_idx").asc())
-    dup = spans.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") > 1)
+    extra = [(90, None), (91, ""), (92, "no terminators here at all"), (93, "One. Two! Three? " * 20)]
+    docs = DOCS + extra
+    df = corpus.union(spark.createDataFrame(extra, "doc_id long, text string"))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
     cols = ["doc_id", "sentence_dedup_text", "sentence_dedup_keep"]
-    kern = {r.doc_id: (r[1], r[2]) for r in _remove_spans(df, dup, "doc_id", "text", cfg).select(*cols).collect()}
-    nat = {r.doc_id: (r[1], r[2]) for r in _remove_spans_native(df, dup, "doc_id", "text", cfg).select(*cols).collect()}
-    assert kern == nat
+    kern = {r[0]: (r[1], r[2]) for r in sentence_dedup.apply(df).select(*cols).collect()}
+    orc = {r[0]: (r[1], r[2]) for r in con.execute(sentence_dedup.oracle_sql()).fetchall()}
+    assert kern == orc
     assert kern[90] == (None, False)  # NULL-text contract pinned explicitly
