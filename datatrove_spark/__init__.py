@@ -11,7 +11,8 @@ declarative Spark DataFrame transformations:
 - formatters (PII, ...)    -> compiled-regex batch transforms
 - dedup (minhash/url/...)  -> shuffle/window/join-based distributed algorithms
                               instead of the reference's sorted-file k-way merges
-- stats/counters           -> groupBy aggregates + df.observe metrics
+- stats/counters           -> groupBy aggregates (run metrics: one aggregate
+                              over the written sink)
 
 Design goals (BASELINE.json north rule): 10^12-document scale, explicit
 partitioning/skew handling, AQE-tuned shuffles, resumable checkpoints with

@@ -48,7 +48,6 @@ EMAIL_RE = (
 IPV4_RE = r"(?:(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)\.){3}(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)"
 
 STOP_WORDS = ("the", "be", "to", "of", "and", "that", "have", "with")  # gopher_quality_filter.py:11
-END_PUNCTUATION = (".", "?", "!", '"', "'")  # c4_filters.py:15
 FINEWEB_STOP_CHARS = (".", "'", '"', "!", "?")  # fineweb_quality_filter.py:32
 POLICY_SUBSTRINGS = (  # c4_filters.py:17-24
     "terms of use",
@@ -58,8 +57,6 @@ POLICY_SUBSTRINGS = (  # c4_filters.py:17-24
     "use of cookies",
     "use cookies",
 )
-
-MERSENNE_61 = (1 << 61) - 1  # minhash.py:26 uses the Mersenne prime 2^61-1
 
 
 @dataclass(frozen=True)

@@ -44,8 +44,6 @@ from datatrove_spark.operators.ngram_lm import NgramLMConfig
 
 NAME = "ccnet"
 
-_TILE_NAMES_3 = {1: "head", 2: "middle", 3: "tail"}
-
 
 def sql_tile(rank: int, n: int, k: int) -> int:
     """Standard SQL ntile: n rows into k tiles, first n % k tiles one larger.

@@ -22,8 +22,9 @@ declarative.
 Deviation note: the reference's duplicated-n-gram scan
 (gopher_repetition_filter.py:57-70) advances by n after each repeat, making
 its result depend on scan order. This engine uses order-independent
-union-of-covered-positions semantics (see reference_impl._dup_ngram_char_frac)
-so results are identical under any parallelism.
+union-of-covered-positions semantics (see the duplicated n-gram loop of
+reference_impl.filters._ngram_checks_np) so results are identical under any
+parallelism.
 """
 
 from __future__ import annotations
@@ -37,7 +38,6 @@ from datatrove_spark.config import GopherRepetitionConfig
 
 NAME = "gopher_repetition"
 
-_PY_STRIP = " \t\n\r\x0b\x0c"
 _SQL_STRIP = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
 
 

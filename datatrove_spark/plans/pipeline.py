@@ -15,20 +15,23 @@ completion markers for resume (:106-127) and per-step counters. Here:
   ``writeTo(...).partitionedBy("keep").createOrReplace()``).
 - resume: a stage output whose ``_SUCCESS`` marker exists is not recomputed
   (the file-level analog of checking an Iceberg snapshot).
-- metrics: per-reason counts + per-partition lineage rows are computed from
-  the *written* files (cheap column-pruned scan) and saved as JSON —
-  matching the reference's Stats JSON (executor/base.py:92-98).
+- metrics: per-reason counts + per-partition lineage rows come from one
+  aggregate over the *written* files (a column-pruned scan) and are saved
+  as JSON — matching the reference's Stats JSON (executor/base.py:92-98).
 """
 
 from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from datatrove_spark.config import URLFilterConfig
 
 
 @dataclass(frozen=True)
@@ -61,12 +64,17 @@ def _done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def canonical_stages(with_url_filter: bool = True) -> list[Stage]:
+def canonical_stages(url_filter: URLFilterConfig = URLFilterConfig()) -> list[Stage]:
     """The FineWeb-order curation flow (examples/fineweb.py:34-63 analog):
     cheap URL rules first, then language ID, then the fused quality battery
     (rewrites text), then PII scrub (rewrites text). Predicate ordering is
-    ours to choose — Catalyst won't reorder opaque UDF stages (SURVEY §4)."""
+    ours to choose — Catalyst won't reorder opaque UDF stages (SURVEY §4).
+    ``url_filter`` configures the URL rules; the default blocks nothing."""
     from datatrove_spark.operators import langid, pii, quality_fused
+    from datatrove_spark.operators import url_filter as url_rules
+
+    def urls(df: DataFrame) -> DataFrame:
+        return url_rules.apply(df, cfg=url_filter)
 
     def quality(df: DataFrame) -> DataFrame:
         out = quality_fused.apply(df)
@@ -79,22 +87,12 @@ def canonical_stages(with_url_filter: bool = True) -> list[Stage]:
     def scrub(df: DataFrame) -> DataFrame:
         return pii.apply(df).withColumn("text", F.col("pii_text")).drop("pii_text")
 
-    stages = []
-    if with_url_filter:
-        stages.append(Stage("url_filter", _url_filter_stage))
-    stages += [
+    return [
+        Stage("url_filter", urls),
         Stage("langid", langid.apply),
         Stage("quality_battery", quality),
         Stage("pii", scrub),
     ]
-    return stages
-
-
-def _url_filter_stage(df: DataFrame) -> DataFrame:
-    from datatrove_spark.config import DEFAULT_CONFIG
-    from datatrove_spark.operators import url_filter
-
-    return url_filter.apply(df, cfg=DEFAULT_CONFIG.url_filter)
 
 
 def run_pipeline(
@@ -118,24 +116,23 @@ def run_pipeline(
         # "read the kept docs" into a file-level filter downstream.
         annotated.write.mode("overwrite").partitionBy("keep").parquet(data_dir)
 
-    written = _read(spark, data_dir)
-    by_reason = {
-        (r["drop_reason"] or "__kept__"): r["n"]
-        for r in written.groupBy("drop_reason").agg(F.count("*").alias("n")).collect()
-    }
-    # per-partition lineage: rows per spark input partition of the sink scan
-    lineage = [
-        {"partition": r["p"], "rows": r["n"]}
-        for r in written.groupBy(F.spark_partition_id().alias("p"))
+    # one scan of the sink: rows per (input partition of the scan, reason)
+    by_reason: Counter[str] = Counter()
+    by_partition: Counter[int] = Counter()
+    for r in (
+        _read(spark, data_dir)
+        .groupBy(F.spark_partition_id().alias("p"), "drop_reason")
         .agg(F.count("*").alias("n"))
         .collect()
-    ]
+    ):
+        by_reason[r["drop_reason"] or "__kept__"] += r["n"]
+        by_partition[r["p"]] += r["n"]
     metrics = {
-        "total": int(sum(by_reason.values())),
-        "kept": int(by_reason.get("__kept__", 0)),
-        "dropped_by_reason": {k: int(v) for k, v in sorted(by_reason.items()) if k != "__kept__"},
+        "total": sum(by_reason.values()),
+        "kept": by_reason["__kept__"],
+        "dropped_by_reason": {k: v for k, v in sorted(by_reason.items()) if k != "__kept__"},
         "stages": [st.name for st in stages],
-        "partitions": lineage,
+        "partitions": [{"partition": p, "rows": n} for p, n in sorted(by_partition.items())],
     }
     with open(metrics_path, "w") as f:
         json.dump(metrics, f, indent=1, sort_keys=True)

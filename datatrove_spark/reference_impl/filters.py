@@ -13,7 +13,6 @@ semantics (config.py TOKENIZER NOTE). They serve double duty:
 
 from __future__ import annotations
 
-import math
 import re
 from collections import Counter
 
@@ -28,7 +27,6 @@ from datatrove_spark.config import (
     GopherRepetitionConfig,
     POLICY_SUBSTRINGS,
     TOKEN_RE,
-    UnigramLogProbConfig,
     WORD_RE,
 )
 
@@ -193,32 +191,6 @@ def _find_duplicates(elements: list[str]) -> tuple[int, int]:
         else:
             seen.add(e)
     return dup_n, dup_chars
-
-
-def _dup_ngram_char_frac(ws: list[str], n: int, text_len: int) -> float:
-    """Union-of-positions semantics (documented deviation from the
-    reference's sequential skip-scan, gopher_repetition_filter.py:57-70,
-    which is order-dependent and not parallelizable): characters of words
-    covered by any occurrence *after the first* of a duplicated n-gram,
-    each word counted once, divided by len(text)."""
-    if len(ws) < n:
-        return 0.0
-    grams: dict[str, int] = {}
-    occs: list[tuple[str, int]] = []
-    for i in range(len(ws) - n + 1):
-        g = " ".join(ws[i : i + n])
-        occs.append((g, i))
-        grams[g] = grams.get(g, 0) + 1
-    first: dict[str, int] = {}
-    for g, i in occs:
-        if g not in first:
-            first[g] = i
-    covered: set[int] = set()
-    for g, i in occs:
-        if grams[g] > 1 and i > first[g]:
-            covered.update(range(i, i + n))
-    dup_chars = sum(len(ws[i]) for i in covered)
-    return dup_chars / text_len
 
 
 def gopher_repetition(
@@ -477,18 +449,6 @@ def fineweb_quality(
     if _ratio_gt(text.count("\n"), len(ws), cfg.new_line_ratio):
         return "list_ratio"
     return None
-
-
-def unigram_log_prob(
-    text: str,
-    freqs: dict[str, float],
-    cfg: UnigramLogProbConfig = UnigramLogProbConfig(),
-) -> float:
-    """Mean ln P(word); provenance: unigram_log_probs.py:62-68."""
-    ws = words(text)
-    if not ws:
-        return 0.0
-    return sum(math.log(freqs.get(w.lower(), cfg.unknown_freq)) for w in ws) / len(ws)
 
 
 def c4_paragraphs(text: str, cfg: C4ParagraphConfig = C4ParagraphConfig()) -> str | None:

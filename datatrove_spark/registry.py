@@ -59,6 +59,7 @@ from datatrove_spark.operators import (
     url_filter,
     winnowing,
 )
+from datatrove_spark.plans.pipeline import canonical_stages, compose
 
 TABLES = (
     "region",
@@ -149,47 +150,35 @@ JOIN c4 USING (doc_id) JOIN fw USING (doc_id)
 """.strip()
 
 
-def _q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full north-rule flow under one hash gate: URL filter -> language
-    ID -> fused quality battery -> PII scrub of the surviving text. One row
-    per input document with the first drop reason in pipeline order, the
-    keep decision, and the curated (C4-rewritten + PII-scrubbed) text for
-    kept documents.
+def curation_pipeline(docs: DataFrame) -> DataFrame:
+    """The full north-rule flow under one hash gate: the production
+    composition ``compose(canonical_stages(...))`` — URL filter -> language
+    ID -> fused quality battery -> PII scrub — with the registry's URL rules,
+    over ``docs`` (doc_id, source, text; the url is ``_CUR_URL_SQL``). One
+    row per document: the first drop reason in stage order, the keep
+    decision, and the curated (C4-rewritten + PII-scrubbed) text of kept
+    documents.
 
-    Like the production path (plans/pipeline.compose), every stage runs on
-    every document and the reasons are coalesced in stage order; because
-    each stage is a pure per-document function of its input text, this
-    yields the same keep/reason/text as the reference's short-circuit, and
-    the oracle can mirror it as one plan. Reference
-    stage order: /root/reference/examples/fineweb.py (url filter -> langid
-    -> gopher rep -> gopher qual -> c4 -> fineweb -> PII formatter)."""
-    df = load(spark, sf_dir, "documents").withColumn(
-        "url",
-        F.concat(
-            F.lit("https://www."),
-            F.col("source"),
-            F.when(F.pmod(F.col("doc_id"), F.lit(5)) == 0, ".bad.com").otherwise(".example.com"),
-            F.lit("/"),
-            F.when(F.pmod(F.col("doc_id"), F.lit(11)) == 0, "casino").otherwise("article"),
-        ),
-    )
-    df = url_filter.apply(df, cfg=_URLF_CFG)
-    df = langid.apply(df)
-    df = quality_pipeline(df)
-    df = pii.apply(df, text_col="final_text")
-    reason = F.coalesce(
-        F.col("url_filter_reason"),
-        F.when(~F.col("langid_keep"), F.lit("lang_filter")),
-        F.col("drop_reason"),
-    )
-    keep = reason.isNull()
+    ``compose`` runs every stage on every document and coalesces the
+    reasons in stage order; because each stage is a pure per-document
+    function of its input text, this yields the same keep/reason/text as
+    the reference's short-circuit, and the oracle mirrors it as one plan.
+    Reference stage order: the reference's examples/fineweb.py (url filter
+    -> langid -> gopher rep -> gopher qual -> c4 -> fineweb -> PII
+    formatter)."""
+    docs = docs.withColumn("url", F.expr(_CUR_URL_SQL))
+    df = compose(docs, canonical_stages(url_filter=_URLF_CFG))
     return df.select(
         "doc_id",
         "language",
-        reason.alias("curation_reason"),
-        keep.alias("curation_keep"),
-        F.when(keep, F.col("pii_text")).alias("curated_text"),
+        F.col("drop_reason").alias("curation_reason"),
+        F.col("keep").alias("curation_keep"),
+        F.when(F.col("keep"), F.col("text")).alias("curated_text"),
     )
+
+
+def _q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return curation_pipeline(load(spark, sf_dir, "documents"))
 
 
 _CUR_URL_SQL = (
@@ -262,16 +251,19 @@ def _q_exact_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("doc_id", "n_words", "n_removed", "es_text")
 
 
+# Each synthetic registry input is one SQL expression over the documents
+# table: the oracle reads it as DuckDB SQL and the Spark side applies the same
+# text with F.expr, so both must stay in the SQL subset the two dialects read
+# alike (||, %, CASE, chr). _SENT_SQL is the exception: its 'g' regex flag is
+# DuckDB-only, so the Spark side keeps its own regexp_replace.
+
 # synthetic URL over the documents table: 20 sources x 7 slots -> ~3.5
 # docs/url, a real dedup workload; priority = n_chars (bigger doc wins).
-_URL_SPARK = lambda: F.concat(  # noqa: E731
-    F.lit("https://"), F.col("source"), F.lit(".example.com/p/"), F.pmod(F.col("doc_id"), F.lit(7))
-)
 _URL_SQL = "'https://' || source || '.example.com/p/' || (doc_id % 7)"
 
 
 def _q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load(spark, sf_dir, "documents").withColumn("url", _URL_SPARK())
+    df = load(spark, sf_dir, "documents").withColumn("url", F.expr(_URL_SQL))
     df = url_dedup.apply(df, priority_col="n_chars")
     return df.select("doc_id", "url", "url_dedup_keep")
 
@@ -283,23 +275,6 @@ def _oracle_url_dedup() -> str:
 
 # PII-bearing text synthesized deterministically from documents columns so
 # the scrub exercises email cycling + public/private/multicast IP branches.
-def _pii_text_spark() -> F.Column:
-    ip1 = F.concat_ws(
-        ".",
-        (F.pmod(F.col("doc_id"), F.lit(223)) + 1).cast("string"),
-        F.pmod(F.col("doc_id"), F.lit(251)).cast("string"),
-        F.pmod(F.col("doc_id"), F.lit(241)).cast("string"),
-        (F.pmod(F.col("doc_id"), F.lit(253)) + 1).cast("string"),
-    )
-    return F.concat(
-        F.col("text"),
-        F.lit(" Contact john.doe@mail-"), F.col("source"),
-        F.lit(".org or admin@"), F.col("source"),
-        F.lit(".example.com now. Servers: "), ip1,
-        F.lit(", 10.0.0.1, 8.8.8.8, 224.0.0.5."),
-    )
-
-
 _PII_TEXT_SQL = (
     "text || ' Contact john.doe@mail-' || source || '.org or admin@' || source || "
     "'.example.com now. Servers: ' || (doc_id % 223 + 1) || '.' || (doc_id % 251) || '.' || "
@@ -308,7 +283,7 @@ _PII_TEXT_SQL = (
 
 
 def _q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load(spark, sf_dir, "documents").withColumn("text", _pii_text_spark())
+    df = load(spark, sf_dir, "documents").withColumn("text", F.expr(_PII_TEXT_SQL))
     return pii.apply(df).select("doc_id", "pii_text")
 
 
@@ -365,7 +340,7 @@ _URL_IDX_CORPUS_T = f"(SELECT *, {_URL_SQL} AS url FROM documents WHERE doc_id %
 
 
 def _q_url_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents").withColumn("url", _URL_SPARK())
+    docs = load(spark, sf_dir, "documents").withColumn("url", F.expr(_URL_SQL))
     corpus = docs.filter(F.col("doc_id") % 13 != 0)
     prior = docs.filter(F.col("doc_id") % 13 == 0)
     df = url_dedup.apply_with_index(
@@ -424,16 +399,7 @@ def _q_decont(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # html synthesized from documents text in both engines -> extraction parity
 def _q_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load(spark, sf_dir, "documents").withColumn(
-        "html",
-        F.concat(
-            F.lit("<html><head><style>p{color:red}</style><script>var x=1;</script></head>"
-                  "<body><h1>Doc "),
-            F.col("doc_id").cast("string"),
-            F.lit("</h1><p>"), F.col("text"),
-            F.lit(" &amp; more</p><!-- hidden --></body></html>"),
-        ),
-    )
+    df = load(spark, sf_dir, "documents").withColumn("html", F.expr(_HTML_SQL))
     return extract.apply(df).select("doc_id", "text")
 
 
@@ -447,24 +413,7 @@ _HTML_SQL = (
 # boilerplate-laden page: nav/footer/sidebar must be stripped by the
 # readability-native extractor, the article <p> must survive
 def _q_extract_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load(spark, sf_dir, "documents").withColumn(
-        "html",
-        F.concat(
-            F.lit(
-                "<html><head><script>var x=1;</script></head><body>"
-                '<nav><ul><li>Home</li><li>About</li></ul></nav>'
-                '<div class="sidebar">Trending now! Subscribe!</div>'
-                "<h1>Doc "
-            ),
-            F.col("doc_id").cast("string"),
-            F.lit("</h1><p>"),
-            F.col("text"),
-            F.lit(
-                " &amp; more</p><footer>Copyright 2024 Example Corp</footer>"
-                "</body></html>"
-            ),
-        ),
-    )
+    df = load(spark, sf_dir, "documents").withColumn("html", F.expr(_RHTML_SQL))
     return readability.apply(df).select("doc_id", "readability_text")
 
 
@@ -487,19 +436,7 @@ _URLF_CFG = URLFilterConfig(
 
 
 def _q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = F.pmod(F.col("doc_id"), F.lit(11))
-    path = (
-        F.when(m == 0, "casino")
-        .when(m == 1, "poker/bet-now")
-        .when(m == 2, "hot-xxx-page")
-        .when(m == 3, "block/this")
-        .otherwise("article")
-    )
-    host_suffix = F.when(F.pmod(F.col("doc_id"), F.lit(5)) == 0, ".bad.com").otherwise(".example.com")
-    df = load(spark, sf_dir, "documents").withColumn(
-        "url",
-        F.concat(F.lit("https://www."), F.col("source"), host_suffix, F.lit("/"), path),
-    )
+    df = load(spark, sf_dir, "documents").withColumn("url", F.expr(_URLF_URL_SQL))
     df = url_filter.apply(df, cfg=_URLF_CFG)
     return df.select("doc_id", "url", "url_filter_reason", "url_filter_keep")
 
@@ -530,29 +467,13 @@ _BW_WORD_SQL = (
     "WHEN 'fr' THEN ' porno gratuit' WHEN 'es' THEN ' porno gratis' "
     "WHEN 'zh' THEN ' 色情内容' ELSE '' END"
 )
+_BW_TEXT_SQL = f"CASE WHEN doc_id % 7 = 0 THEN text || ({_BW_WORD_SQL}) ELSE text END"
+_BW_LANG_SQL = "CASE WHEN doc_id % 11 = 0 THEN 'xx' ELSE lang END"
 
 
 def _q_c4_badwords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    word = (
-        F.when(F.col("lang") == "en", " cheap viagra here")
-        .when(F.col("lang") == "de", " gratis porno seite")
-        .when(F.col("lang") == "fr", " porno gratuit")
-        .when(F.col("lang") == "es", " porno gratis")
-        .when(F.col("lang") == "zh", " 色情内容")
-        .otherwise("")
-    )
-    df = (
-        load(spark, sf_dir, "documents")
-        .withColumn(
-            "text",
-            F.when(F.pmod(F.col("doc_id"), F.lit(7)) == 0, F.concat(F.col("text"), word)).otherwise(
-                F.col("text")
-            ),
-        )
-        .withColumn(
-            "lang",
-            F.when(F.pmod(F.col("doc_id"), F.lit(11)) == 0, F.lit("xx")).otherwise(F.col("lang")),
-        )
+    df = load(spark, sf_dir, "documents").withColumns(
+        {"text": F.expr(_BW_TEXT_SQL), "lang": F.expr(_BW_LANG_SQL)}
     )
     df = c4_badwords.apply(df, cfg=_BW_CFG)
     return df.select(
@@ -566,29 +487,11 @@ def _oracle_c4_badwords() -> str:
     return f"""
 WITH bw AS (
   SELECT doc_id,
-    CASE WHEN doc_id % 7 = 0 THEN text || ({_BW_WORD_SQL}) ELSE text END AS text,
-    CASE WHEN doc_id % 11 = 0 THEN 'xx' ELSE lang END AS lang
+    {_BW_TEXT_SQL} AS text,
+    {_BW_LANG_SQL} AS lang
   FROM documents
 ), {inner[len("WITH "):]}
 """.strip()
-
-
-def _q_toxicity_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    word = (
-        F.when(F.col("lang") == "en", " buy viagra and XXX stuff ")
-        .when(F.col("lang") == "de", " nur Porno hier ")
-        .when(F.col("lang") == "fr", " du porno gratuit ")
-        .when(F.col("lang") == "es", " porno y mas porno ")
-        .when(F.col("lang") == "zh", " 含有色情内容 ")
-        .otherwise("")
-    )
-    df = load(spark, sf_dir, "documents").withColumn(
-        "text",
-        F.when(F.pmod(F.col("doc_id"), F.lit(3)) == 0, F.concat(F.col("text"), word)).otherwise(
-            F.col("text")
-        ),
-    )
-    return c4_badwords.apply_scrub(df).select("doc_id", "toxicity_text")
 
 
 _TOX_WORD_SQL = (
@@ -596,6 +499,12 @@ _TOX_WORD_SQL = (
     "WHEN 'fr' THEN ' du porno gratuit ' WHEN 'es' THEN ' porno y mas porno ' "
     "WHEN 'zh' THEN ' 含有色情内容 ' ELSE '' END"
 )
+_TOX_TEXT_SQL = f"CASE WHEN doc_id % 3 = 0 THEN text || ({_TOX_WORD_SQL}) ELSE text END"
+
+
+def _q_toxicity_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    df = load(spark, sf_dir, "documents").withColumn("text", F.expr(_TOX_TEXT_SQL))
+    return c4_badwords.apply_scrub(df).select("doc_id", "toxicity_text")
 
 
 def _oracle_toxicity_scrub() -> str:
@@ -603,7 +512,7 @@ def _oracle_toxicity_scrub() -> str:
     return f"""
 WITH tox AS (
   SELECT doc_id, lang,
-    CASE WHEN doc_id % 3 = 0 THEN text || ({_TOX_WORD_SQL}) ELSE text END AS text
+    {_TOX_TEXT_SQL} AS text
   FROM documents
 )
 {inner}
@@ -716,10 +625,7 @@ def _q_regex_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_symbol_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load(spark, sf_dir, "documents").withColumn(
-        "text",
-        F.concat(F.col("text"), F.lit("\n***\n=-=-=\n\nthe tail line stays here.\n!!!")),
-    )
+    df = load(spark, sf_dir, "documents").withColumn("text", F.expr(_SYMLINES_TEXT_SQL))
     return formatters.apply(df).select("doc_id", "symbol_lines_text")
 
 
@@ -730,7 +636,7 @@ _SYMLINES_TEXT_SQL = (
 
 
 def _q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load(spark, sf_dir, "documents").withColumn("url", _URL_SPARK())
+    df = load(spark, sf_dir, "documents").withColumn("url", F.expr(_URL_SQL))
     return host_stats.apply(df)
 
 

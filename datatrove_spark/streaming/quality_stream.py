@@ -5,9 +5,9 @@ its "incremental" story is per-rank completion markers. Streaming is a
 first-class engine capability here because a production crawl is a stream:
 
 - every quality stage is a stateless per-row projection (native exprs or
-  Arrow-batched UDFs), so the SAME composed plan from plans/pipeline.py
-  runs unchanged under ``readStream`` — one code path for batch and
-  streaming (the core promise of Structured Streaming);
+  Arrow-batched UDFs), so ``plans.pipeline.compose`` applied to the
+  ``readStream`` frame is the SAME plan as in batch — one code path for
+  batch and streaming (the core promise of Structured Streaming);
 - metrics become a watermarked windowed aggregation on ``warc_ts`` —
   late pages beyond the watermark are dropped from the count state, which
   bounds state size on an unbounded crawl;
@@ -24,8 +24,6 @@ lambda shape the reference's multi-job dedup also implies.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -35,8 +33,6 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
-
-from datatrove_spark.plans.pipeline import Stage, compose
 
 PAGES_SCHEMA = StructType(
     [
@@ -56,12 +52,6 @@ def read_pages_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def quality_stream(stream_df: DataFrame, stages: Sequence[Stage]) -> DataFrame:
-    """The batch compositor applied to a streaming DataFrame — identical
-    plan, incremental execution."""
-    return compose(stream_df, stages)
 
 
 def dedup_stream(

@@ -11,10 +11,12 @@ Local smoke:
 
     python scripts/run_pipeline.py --generate 10000 --output /tmp/curated
 
-Reads the pages table (url, warc_ts, html, text, lang), runs URL rules ->
-language ID -> fused quality battery -> PII scrub, writes kept/removed in
-one pass partitioned by `keep`, plus metrics.json with per-reason counts
-and per-partition lineage. Re-running with --resume skips completed output.
+Reads the pages table (url, warc_ts, html, text, lang) and runs
+``compose(canonical_stages())``: URL rules (the default config blocks
+nothing) -> language ID -> fused quality battery -> PII scrub. Writes
+kept/removed in one pass partitioned by `keep`, plus metrics.json with
+per-reason counts and per-partition lineage. A re-run skips a completed
+output unless --no-resume is given.
 """
 
 from __future__ import annotations
@@ -33,7 +35,6 @@ def main() -> int:
     ap.add_argument("--generate", type=int, default=0, help="generate N synthetic pages instead")
     ap.add_argument("--output", required=True)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--no-url-filter", action="store_true")
     ap.add_argument("--repartition", type=int, default=0)
     args = ap.parse_args()
 
@@ -55,13 +56,7 @@ def main() -> int:
     if args.repartition:
         df = df.repartition(args.repartition)
 
-    metrics = run_pipeline(
-        spark,
-        df,
-        canonical_stages(with_url_filter=not args.no_url_filter),
-        args.output,
-        resume=not args.no_resume,
-    )
+    metrics = run_pipeline(spark, df, canonical_stages(), args.output, resume=not args.no_resume)
     print(json.dumps(metrics))
     return 0
 

@@ -43,6 +43,7 @@ def test_run_pipeline_dual_sink_and_resume(spark, tmp_path):
     m = run_pipeline(spark, df, STAGES, out)
     assert m["total"] == 500
     assert m["kept"] + sum(m["dropped_by_reason"].values()) == 500
+    assert sum(p["rows"] for p in m["partitions"]) == m["total"]
     assert m["kept"] > 0 and m["dropped_by_reason"]
     assert kept(spark, out).count() == m["kept"]
     assert removed(spark, out).count() == 500 - m["kept"]

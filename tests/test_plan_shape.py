@@ -138,19 +138,20 @@ def test_ngram_lm_broadcast_scoring_joins(spark, pages):
 
 
 def test_curation_pipeline_is_shuffle_free(pages):
-    """The composed north-rule flow (URL filter -> langid -> quality battery
-    -> PII scrub) is per-document end to end: one narrow stage, scan ->
-    kernels -> project. An Exchange anywhere here would shuffle the full
-    corpus text at every curation run."""
-    from datatrove_spark.operators import langid, pii, url_filter
+    """The production curation composition (URL filter -> langid -> quality
+    battery -> PII scrub) is per-document end to end: one narrow stage, scan
+    -> kernels -> project. An Exchange anywhere here would shuffle the full
+    corpus text at every curation run. The plan run_pipeline writes has
+    exactly two Arrow hops: langid and the battery share one, PII over the
+    battery's text is the other."""
+    from datatrove_spark.plans.pipeline import canonical_stages, compose
 
     df = pages.withColumn("url", F.concat(F.lit("https://h.example.com/"), F.col("doc_id")))
-    df = url_filter.apply(df)
-    df = langid.apply(df)
-    df = quality_pipeline(df)
-    df = pii.apply(df, text_col="final_text")
-    plan = plan_of(df.filter("url_filter_keep AND langid_keep AND keep"))
+    annotated = compose(df, canonical_stages())
+    plan = plan_of(annotated.filter("keep"))
     assert "Exchange" not in plan, plan
+    plan = plan_of(annotated, "simple")
+    assert plan.count("ArrowEvalPython") == 2, plan
 
 
 def test_jaccard_pairs_no_corpus_hof_no_array_broadcast(pages):

@@ -142,3 +142,38 @@ def test_langid_kernel_matches_oracle_on_edges(spark):
     got = {r[0]: r[1:] for r in a}
     assert got[1000] == ("und", None, False)  # NULL text: no words, dropped
     assert got[1003] == ("und", 0.0, False)  # words but no profile hit
+
+
+def test_curation_flow_keeps_and_scrubs_like_oracle(spark):
+    """The curation_pipeline row keeps no testdata doc, so its gate never
+    sees curated text. Generated pages do pass the battery: run ~400 of them
+    through the registry's curation helper and compare every row with the
+    row's DuckDB oracle over the same (doc_id, source, text), including
+    kept docs whose battery text the PII stage rewrote."""
+    import duckdb
+    import pyarrow as pa
+
+    from datatrove_spark.sources.pages import generate_pages
+
+    texts = sorted(r.text for r in generate_pages(spark, 400).select("text").collect())
+    ids = list(range(len(texts)))
+    sources = [f"src{d % 20}" for d in ids]
+    docs = spark.createDataFrame(
+        list(zip(ids, sources, texts)), "doc_id long, source string, text string"
+    ).repartition(4)
+    cols = ["doc_id", "language", "curation_reason", "curation_keep", "curated_text"]
+    got = sorted(tuple(r) for r in registry.curation_pipeline(docs).select(cols).collect())
+
+    con = duckdb.connect()
+    con.register("documents", pa.table({"doc_id": ids, "source": sources, "text": texts}))
+    want = sorted(tuple(r) for r in con.execute(
+        f"SELECT {', '.join(cols)} FROM ({registry._oracle_curation_pipeline()})"
+    ).fetchall())
+    assert got == want
+
+    battery_text = dict(con.execute(
+        f"SELECT doc_id, final_text FROM ({registry._oracle_quality_pipeline(fused=True)})"
+    ).fetchall())
+    kept = [(d, text) for d, _, _, keep, text in got if keep]
+    assert kept
+    assert any(text != battery_text[d] for d, text in kept)

@@ -24,7 +24,7 @@ def test_stream_equals_batch(spark, pages_dir, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     stream = qs.read_pages_stream(spark, pages_dir, max_files_per_trigger=2)
-    annotated = qs.quality_stream(stream, STAGES).select("url", "keep", "drop_reason")
+    annotated = compose(stream, STAGES).select("url", "keep", "drop_reason")
     q = qs.write_stream(annotated, out, ckpt)
     q.awaitTermination(120)
 
@@ -35,7 +35,7 @@ def test_stream_equals_batch(spark, pages_dir, tmp_path):
 
     # restart with same checkpoint + no new input -> no duplicate output
     q2 = qs.write_stream(
-        qs.quality_stream(qs.read_pages_stream(spark, pages_dir), STAGES).select(
+        compose(qs.read_pages_stream(spark, pages_dir), STAGES).select(
             "url", "keep", "drop_reason"
         ),
         out,
@@ -47,7 +47,7 @@ def test_stream_equals_batch(spark, pages_dir, tmp_path):
 
 def test_windowed_metrics(spark, pages_dir, tmp_path):
     stream = qs.read_pages_stream(spark, pages_dir)
-    metrics = qs.windowed_metrics(qs.quality_stream(stream, STAGES), window="6 hours")
+    metrics = qs.windowed_metrics(compose(stream, STAGES), window="6 hours")
     q = (
         metrics.writeStream.format("memory")
         .queryName("m1")
