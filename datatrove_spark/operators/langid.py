@@ -29,7 +29,7 @@ from __future__ import annotations
 import re as _re
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datatrove_spark.config import LangIdConfig
@@ -101,29 +101,34 @@ _THAI = _re.compile(THAI_RE)
 _HANGUL = _re.compile(HANGUL_RE)
 _KANA = _re.compile(KANA_RE)
 _HAN = _re.compile(HAN_RE)
-_WS_RE = _re.compile(r"\S+")
 
 
 def py_langid(text: str | None) -> tuple[str, float | None]:
     """(language, UNROUNDED score) — one token pass over an inverted
     word->languages index. Score None mirrors the oracle's NULL (no words /
-    NULL / empty text, where its nullif divisions return NULL)."""
+    NULL / empty text, where its nullif divisions return NULL).
+
+    Every script class is non-ASCII, so ASCII text skips the four
+    script-fraction scans. ``str.split()`` yields the oracle's ``\\S+``
+    tokens: ``re``'s ``\\s`` and ``str.isspace()`` agree on every code point
+    (pinned by a test)."""
     if not text:
         return "und", None
-    n_chars = len(text)
-    tf = len(_THAI.findall(text)) / n_chars
-    if tf > SCRIPT_FRAC_THRESHOLD:
-        return "th", tf
-    hf = len(_HANGUL.findall(text)) / n_chars
-    if hf > SCRIPT_FRAC_THRESHOLD:
-        return "ko", hf
-    kf = len(_KANA.findall(text)) / n_chars
-    if kf > SCRIPT_FRAC_THRESHOLD:
-        return "ja", kf
-    cf = len(_HAN.findall(text)) / n_chars
-    if cf > SCRIPT_FRAC_THRESHOLD:
-        return "zh", cf
-    ws = _WS_RE.findall(text.lower())
+    if not text.isascii():
+        n_chars = len(text)
+        tf = len(_THAI.findall(text)) / n_chars
+        if tf > SCRIPT_FRAC_THRESHOLD:
+            return "th", tf
+        hf = len(_HANGUL.findall(text)) / n_chars
+        if hf > SCRIPT_FRAC_THRESHOLD:
+            return "ko", hf
+        kf = len(_KANA.findall(text)) / n_chars
+        if kf > SCRIPT_FRAC_THRESHOLD:
+            return "ja", kf
+        cf = len(_HAN.findall(text)) / n_chars
+        if cf > SCRIPT_FRAC_THRESHOLD:
+            return "zh", cf
+    ws = text.lower().split()
     if not ws:
         return "und", None
     counts: dict[str, int] = {}
@@ -155,10 +160,11 @@ def _kernel_udf():
     return _detect_batch
 
 
-def apply(df: DataFrame, text_col: str = "text", cfg: LangIdConfig = LangIdConfig()) -> DataFrame:
-    """Arrow-batched py_langid kernel; rounding is applied Spark-side so
-    the score is bit-identical to the oracle's round(score, 6)."""
-    d = _kernel_udf()(F.col(text_col))
+def with_decision(df: DataFrame, d: Column, cfg: LangIdConfig = LangIdConfig()) -> DataFrame:
+    """The Spark-side langid rule over a struct ``d`` holding py_langid's
+    (language, raw): adds ``language``, ``language_score`` (rounded
+    Spark-side so it is bit-identical to the oracle's round(score, 6)),
+    ``langid_reason`` and ``langid_keep``."""
     df = df.withColumn("language", d["language"]).withColumn(
         "language_score", F.round(d["raw"], 6)
     )
@@ -166,6 +172,11 @@ def apply(df: DataFrame, text_col: str = "text", cfg: LangIdConfig = LangIdConfi
     return df.withColumn(
         f"{NAME}_reason", F.when(~keep, F.lit("lang_filter")).otherwise(F.lit(None).cast("string"))
     ).withColumn(f"{NAME}_keep", keep)
+
+
+def apply(df: DataFrame, text_col: str = "text", cfg: LangIdConfig = LangIdConfig()) -> DataFrame:
+    """Arrow-batched py_langid kernel, then the Spark-side rule."""
+    return with_decision(df, _kernel_udf()(F.col(text_col)), cfg)
 
 
 def oracle_sql(

@@ -12,11 +12,15 @@ sharded, which violates the north rule's byte-identical-per-url invariant
 under re-partitioning. Per-document reset is deterministic at any
 parallelism.
 
-Execution: one Arrow-batched pandas UDF (compiled regexes + closures, no
-per-row Python interpreter startup); regexes stay in Python `re` for dialect
-parity (§7.3.4). The DuckDB oracle replays the exact same algorithm
-relationally with split/extract_all interleaving and an integer-range
-rendering of ipaddress.is_global.
+Execution: ``scrub`` is the per-document kernel. The curation flow calls
+it inside its one fused Arrow kernel (``plans/pipeline.py``); ``apply`` runs
+it alone in an Arrow-batched pandas UDF. Regexes stay in Python `re` for
+dialect parity (§7.3.4). Each ``sub`` runs only when the text holds a
+substring every match must contain (``@`` for emails, digit-dot-digit for
+IPv4), so most documents skip both scans; the output is unchanged. The
+DuckDB oracle replays the exact same algorithm relationally with
+split/extract_all interleaving and an integer-range rendering of
+ipaddress.is_global.
 """
 
 from __future__ import annotations
@@ -35,6 +39,8 @@ NAME = "pii"
 
 _EMAIL = re.compile(EMAIL_RE)
 _IPV4 = re.compile(IPV4_RE)
+# every IPV4_RE match contains an ASCII digit, a dot and an ASCII digit
+_IPV4_HINT = re.compile(r"[0-9]\.[0-9]")
 
 
 def _is_public(m: str) -> bool:
@@ -48,7 +54,7 @@ def scrub(text: str, cfg: PIIConfig = PIIConfig()) -> str:
     """Pure-Python per-document kernel (shared by the pandas UDF and tests).
     NULL text = empty document."""
     text = text or ""
-    if cfg.remove_emails:
+    if cfg.remove_emails and "@" in text:  # EMAIL_RE requires a literal "@"
         i = 0
 
         def esub(mo: re.Match) -> str:
@@ -58,7 +64,7 @@ def scrub(text: str, cfg: PIIConfig = PIIConfig()) -> str:
             return r
 
         text = _EMAIL.sub(esub, text)
-    if cfg.remove_ips:
+    if cfg.remove_ips and _IPV4_HINT.search(text):
         j = 0
 
         def isub(mo: re.Match) -> str:

@@ -10,13 +10,12 @@ stage (measured 24 s / 10k docs on local[32] vs 11 s for the stages run
 separately).
 
 This operator runs the whole battery in ONE Arrow-batched pandas UDF whose
-per-doc kernels are the engine's pure-Python reference implementations —
-tokenize once, short-circuit in stage order, rewrite once. Measured 3.5 s /
-10k docs (≈7x the composed plan) with bit-identical keep decisions. At
-100 TB both shapes are embarrassingly parallel single-pass scans; the fused
-kernel simply spends ~7x less CPU per row, and Arrow batching keeps the
-Python boundary amortized (input_hint: no per-row Python — this is
-per-BATCH Python with vectorized transport).
+per-doc body (``battery``) calls the engine's pure-Python reference
+implementations: tokenize once, short-circuit in stage order, rewrite once.
+Keep decisions are bit-identical to the per-stage operators. The curation
+flow (``plans/pipeline.py``) calls the same ``battery`` inside its fused
+langid + battery + PII kernel; ``apply`` serves the single-operator registry
+rows. Arrow batching amortizes the Python boundary per batch, not per row.
 
 Short-circuit semantics (matches reference pipeline order, base_filter
 short-circuiting):
@@ -34,13 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from datatrove_spark.config import (
-    C4QualityConfig,
-    EngineConfig,
-    FineWebQualityConfig,
-    GopherQualityConfig,
-    GopherRepetitionConfig,
-)
+from datatrove_spark.config import EngineConfig
+from datatrove_spark.reference_impl import filters as rf
 
 NAME = "quality_fused"
 
@@ -49,32 +43,31 @@ RESULT_SCHEMA = StructType(
 )
 
 
-def make_udf(cfg: EngineConfig = EngineConfig()):
-    rep_cfg: GopherRepetitionConfig = cfg.gopher_repetition
-    gq_cfg: GopherQualityConfig = cfg.gopher_quality
-    c4_cfg: C4QualityConfig = cfg.c4
-    fw_cfg: FineWebQualityConfig = cfg.fineweb
+def battery(text: str | None, cfg: EngineConfig = EngineConfig()) -> tuple[str | None, str | None]:
+    """Per-document battery: (first drop reason or None, final text). The
+    final text is the c4 rewrite when both gopher stages passed, else the
+    input unchanged."""
+    ws = rf.words(text)  # one tokenization shared by both gopher stages
+    reason = rf.gopher_repetition(text, cfg.gopher_repetition, ws=ws)
+    if reason is None:
+        reason = rf.gopher_quality(text, cfg.gopher_quality, ws=ws)
+    if reason is not None:
+        return reason, text
+    reason, new_text = rf.c4_quality(text, cfg.c4)
+    if reason is None:
+        reason = rf.fineweb_quality(new_text, cfg.fineweb)
+    return reason, new_text
 
+
+def make_udf(cfg: EngineConfig = EngineConfig()):
     @F.pandas_udf(RESULT_SCHEMA)
     def quality_battery(texts: pd.Series) -> pd.DataFrame:
-        from datatrove_spark.reference_impl import filters as rf
-
         reasons, outs = [], []
         for t in texts:
-            ws = rf.words(t)  # one tokenization shared by both gopher stages
-            reason = rf.gopher_repetition(t, rep_cfg, ws=ws)
-            new_text = t
-            if reason is None:
-                reason = rf.gopher_quality(t, gq_cfg, ws=ws)
-            if reason is None:
-                reason, new_text = rf.c4_quality(t, c4_cfg)
-                if reason is None:
-                    reason = rf.fineweb_quality(new_text, fw_cfg)
+            reason, new_text = battery(t, cfg)
             reasons.append(reason)
             # NULL means "unchanged": only c4-rewritten docs ship text back
-            # over Arrow (apply() coalesces with the input column JVM-side).
-            # On web text most docs rewrite to themselves, so this halves
-            # the Python->JVM transfer on the headline path.
+            # over Arrow (apply() coalesces with the input column JVM-side)
             outs.append(None if new_text == t else new_text)
         return pd.DataFrame({"drop_reason": reasons, "final_text": outs})
 

@@ -7,8 +7,10 @@ completion markers for resume (:106-127) and per-step counters. Here:
 - a *stage* is a named ``DataFrame -> DataFrame`` transformation that may add
   ``<name>_reason`` / ``<name>_keep`` / rewritten-text columns — composition
   builds ONE lazy Catalyst plan, so whole-stage codegen fuses every native
-  stage and Arrow pipelining batches the pandas-UDF stages; nothing
-  materializes between stages.
+  stage; nothing materializes between stages.
+- the curation flow (``canonical_stages``) crosses into Python once per
+  document: one Arrow-batched kernel runs langid, the quality battery and
+  the PII scrub, and its stages read their results from that one column.
 - ``run_pipeline`` materializes once into a dual sink: a single
   ``partitionBy("keep")`` parquet write (kept + removed in one pass — no
   cache of the full corpus, no recompute; the Iceberg equivalent is
@@ -28,10 +30,11 @@ from collections import Counter
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datatrove_spark.config import URLFilterConfig
+from datatrove_spark.config import EngineConfig, URLFilterConfig
 
 
 @dataclass(frozen=True)
@@ -64,32 +67,66 @@ def _done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+# the curation kernel's result column: added by the langid stage, read by
+# the quality_battery stage, consumed and dropped by the pii stage
+_CURATION = "__curation"
+_CURATION_SCHEMA = "struct<language:string, raw:double, drop_reason:string, text:string>"
+
+
+def _curation_udf(cfg: EngineConfig):
+    from datatrove_spark.operators import langid, pii, quality_fused
+
+    @F.pandas_udf(_CURATION_SCHEMA)
+    def curation(texts: pd.Series) -> pd.DataFrame:
+        langs, raws, reasons, outs = [], [], [], []
+        for t in texts:
+            lg, raw = langid.py_langid(t)
+            reason, battery_text = quality_fused.battery(t, cfg)
+            final = pii.scrub(battery_text, cfg.pii)
+            langs.append(lg)
+            raws.append(raw)
+            reasons.append(reason)
+            # NULL means "unchanged": only rewritten docs ship text back
+            outs.append(None if final == t else final)
+        return pd.DataFrame({"language": langs, "raw": raws, "drop_reason": reasons, "text": outs})
+
+    return curation
+
+
 def canonical_stages(url_filter: URLFilterConfig = URLFilterConfig()) -> list[Stage]:
     """The FineWeb-order curation flow (examples/fineweb.py:34-63 analog):
-    cheap URL rules first, then language ID, then the fused quality battery
-    (rewrites text), then PII scrub (rewrites text). Predicate ordering is
-    ours to choose — Catalyst won't reorder opaque UDF stages (SURVEY §4).
-    ``url_filter`` configures the URL rules; the default blocks nothing."""
-    from datatrove_spark.operators import langid, pii, quality_fused
+    cheap URL rules first (JVM-side), then language ID, then the fused
+    quality battery (rewrites text), then PII scrub of the battery's text.
+    Predicate ordering is ours to choose — Catalyst won't reorder opaque UDF
+    stages (SURVEY §4). ``url_filter`` configures the URL rules; the default
+    blocks nothing.
+
+    One Python crossing per document: the ``langid`` stage adds one
+    Arrow-batched kernel column that runs py_langid, the battery and the
+    scrub on each text; ``quality_battery`` reads its reason from that
+    column and ``pii`` takes the final text from it and drops it. So the
+    stages must run in this order. Every kernel runs on every document (no
+    short-circuit): the ``keep=false`` partition holds scrubbed text too."""
+    from datatrove_spark.operators import langid
     from datatrove_spark.operators import url_filter as url_rules
 
     def urls(df: DataFrame) -> DataFrame:
         return url_rules.apply(df, cfg=url_filter)
 
+    def language(df: DataFrame) -> DataFrame:
+        df = df.withColumn(_CURATION, _curation_udf(EngineConfig())(F.col("text")))
+        return langid.with_decision(df, F.col(_CURATION))
+
     def quality(df: DataFrame) -> DataFrame:
-        out = quality_fused.apply(df)
-        return (
-            out.withColumnRenamed("drop_reason", "quality_battery_reason")
-            .withColumn("text", F.col("final_text"))
-            .drop("final_text", "keep")
-        )
+        return df.withColumn("quality_battery_reason", F.col(f"{_CURATION}.drop_reason"))
 
     def scrub(df: DataFrame) -> DataFrame:
-        return pii.apply(df).withColumn("text", F.col("pii_text")).drop("pii_text")
+        text = F.coalesce(F.col(f"{_CURATION}.text"), F.col("text"))
+        return df.withColumn("text", text).drop(_CURATION)
 
     return [
         Stage("url_filter", urls),
-        Stage("langid", langid.apply),
+        Stage("langid", language),
         Stage("quality_battery", quality),
         Stage("pii", scrub),
     ]

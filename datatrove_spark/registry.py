@@ -159,10 +159,13 @@ def curation_pipeline(docs: DataFrame) -> DataFrame:
     decision, and the curated (C4-rewritten + PII-scrubbed) text of kept
     documents.
 
-    ``compose`` runs every stage on every document and coalesces the
-    reasons in stage order; because each stage is a pure per-document
-    function of its input text, this yields the same keep/reason/text as
-    the reference's short-circuit, and the oracle mirrors it as one plan.
+    The URL rules run JVM-side; langid, the battery and the PII scrub of
+    the battery's text run in one Arrow kernel, so each document crosses
+    into Python once. Every kernel runs on every document and ``compose``
+    coalesces the reasons in stage order; because each stage is a pure
+    per-document function of its input text, this yields the same
+    keep/reason/text as the reference's short-circuit, and the oracle
+    mirrors it as one plan.
     Reference stage order: the reference's examples/fineweb.py (url filter
     -> langid -> gopher rep -> gopher qual -> c4 -> fineweb -> PII
     formatter)."""
